@@ -111,3 +111,82 @@ def test_sparse_sample_fallback_fires_on_small_input(spark, transcripts):
     oversized conversation."""
     heavy = P.heavy_conv_ids(transcripts, fraction=0.04, threshold=0.2)
     assert "conv-00000" in heavy
+
+
+def _extract_stage_tasks(spark, monkeypatch, out, run):
+    """Run `run()` and return the task count of the extraction stage:
+    the last stage of the jobs that write `out` (AQE runs the exchange's
+    map side as its own job first, so the Arrow stage is the newest)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    sc = spark.sparkContext
+    group = f"extract-write-{out}"
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if path != out:
+            return real(self, path, *args, **kwargs)
+        sc.setJobGroup(group, "extraction write")
+        try:
+            return real(self, path, *args, **kwargs)
+        finally:
+            sc._jsc.clearJobGroup()
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    try:
+        run()
+    finally:
+        monkeypatch.undo()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stage = max(sid for j in tracker.getJobIdsForGroup(group)
+                for sid in tracker.getJobInfo(j).stageIds)
+    return tracker.getStageInfo(stage).numTasks
+
+
+def _output_by_file(out):
+    """{bucket: sorted rows} plus a check that every file keeps the
+    stable (conv_id, turn_idx) order."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    cols = ["conv_id", "turn_idx", "role", "tool", "ts", "fmt", "md",
+            "status", "message"]
+    rows: dict = {}
+    for f in sorted(glob.glob(f"{out}/bucket=*/*.parquet")):
+        t = pq.read_table(f, columns=cols).to_pylist()
+        keys = [(r["conv_id"], r["turn_idx"]) for r in t]
+        assert keys == sorted(keys), f"{f} is out of (conv_id, turn_idx) order"
+        bucket = int(f.split("bucket=")[1].split("/")[0])
+        rows.setdefault(bucket, []).extend(tuple(r[c] for c in cols) for r in t)
+    return {b: sorted(r) for b, r in rows.items()}
+
+
+def test_extract_stage_runs_in_one_wave(spark, transcripts, tmp_path,
+                                        monkeypatch):
+    """With more buckets than task slots the Arrow stage is sized to the
+    slots, and its output equals the one-task-per-bucket shape."""
+    n_buckets = 16
+    slots = spark.sparkContext.defaultParallelism
+    assert slots < n_buckets
+    runs = {}
+    for name, parts in (("slots", None), ("buckets", n_buckets)):
+        out, lin = str(tmp_path / f"out_{name}"), str(tmp_path / f"lin_{name}")
+        tasks = _extract_stage_tasks(
+            spark, monkeypatch, out,
+            lambda: P.run_extract_job(spark, transcripts, out, lin,
+                                      n_buckets=n_buckets,
+                                      num_partitions=parts,
+                                      input_snapshot="s"))
+        lineage = sorted(
+            (r.bucket, r.input_snapshot, r.rows_in, r.rows_out, r.error_count)
+            for r in spark.read.parquet(lin).collect())
+        # every output column but the per-row `seconds` timing
+        ordered = P.read_extracted(spark, out).drop("seconds").collect()
+        runs[name] = (tasks, _output_by_file(out), ordered, lineage)
+
+    assert runs["slots"][0] <= slots
+    assert runs["buckets"][0] == n_buckets  # the stage was found
+    assert runs["slots"][1:] == runs["buckets"][1:]
+    assert len(runs["slots"][2]) == N_TURNS

@@ -7,8 +7,10 @@ the hot path; each has an ANSI-SQL twin in __spark_entry__.oracle_sql
 
 Design for 100 TB:
  - tfidf_topk_terms moves (doc, term, tf) partials through ONE
-   map-side-combinable groupBy; document frequencies attach via a
-   window COUNT over the term partition (no df-table join), and the
+   map-side-combinable groupBy and localCheckpoints the reduced tf
+   table; document frequencies are a combinable groupBy(term)
+   aggregate over that table, joined back with no broadcast hint
+   (AQE picks broadcast or a skew-splittable shuffle join), and the
    per-document top-k is a bounded window, never a global sort.
  - bm25_topk never explodes tokens at all: the query term list is
    tiny and fixed, so per-document term frequencies compile to

@@ -18,19 +18,24 @@ At 100 TB this is a NO-OP by construction: a real corpus scan has
 thousands of splits, `getNumPartitions() >= defaultParallelism`, and
 the DataFrame is returned untouched — so operators can call it
 unconditionally without ever adding a shuffle to a properly
-partitioned input.  (The check costs a plan conversion, no job.)
+partitioned input.  (Above a scan the check costs a plan
+conversion, no job.)
+
+Call it directly above a scan.  The partition count comes from
+``df.rdd.getNumPartitions()``, which is the scan's split count only
+when nothing wide sits between the scan and the call.  Above an
+Exchange, building the RDD makes AQE run the upstream shuffle stage (a
+Spark job, so the check is no longer free) and the count is whatever
+AQE coalesced that shuffle to; above a ``coalesce`` it is the reduced
+count, and fan_out shuffles again.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 
 
 def fan_out(df: DataFrame) -> DataFrame:
-    if os.environ.get("SPARK_GRAFT_NO_FANOUT"):  # A/B escape hatch
-        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:
