@@ -74,12 +74,12 @@ def test_types_all_expands():
 
 @pytest.mark.parametrize("patch,needle", [
     ({"file_types": ["pdf", "rtf"]}, "invalid file type"),
-    ({"output": {"mode": "truncate"}}, "invalid output mode"),
-    ({"logging": {"level": "chatty"}}, "invalid log level"),
+    ({"performance": {"buckets": "64"}}, "buckets"),
+    ({"performance": {"salt": 1.5}}, "salt"),
     ({"performance": {"buckets": 0}}, "buckets"),
     ({"performance": {"salt": -1}}, "salt"),
     ({"performance": {"partitions": -2}}, "partitions"),
-    ({"performance": {"heavy_threshold": 2.0}}, "heavy_threshold"),
+    ({"performance": {"partitions": "4"}}, "partitions"),
     ({"filters": {"exclude_sources": "notalist"}}, "exclude_sources"),
 ])
 def test_validate_errors(patch, needle):

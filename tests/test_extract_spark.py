@@ -11,7 +11,8 @@ from pyspark.sql import functions as F
 
 from tool_documentsconverter_spark import kernels as K
 from tool_documentsconverter_spark.functions.sniff import sniff_format as sniff_col
-from tool_documentsconverter_spark.functions.markdown import wrap_turn_md
+from tool_documentsconverter_spark.functions.markdown import wrap_text_md
+from tool_documentsconverter_spark.functions.text import turn_stem
 from tool_documentsconverter_spark.operators.extract import extract
 from tool_documentsconverter_spark.sources.transcripts import synth_transcripts
 
@@ -78,7 +79,8 @@ def test_column_wrap_matches_kernel_wrap(spark):
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
     got = df.select(
         "conv_id", "turn_idx",
-        wrap_turn_md(F.col("conv_id"), F.col("turn_idx"), F.col("text")).alias("md"),
+        wrap_text_md(turn_stem(F.col("conv_id"), F.col("turn_idx")),
+                     F.col("text")).alias("md"),
     ).collect()
     expected = {
         (c, t): K.wrap_text_md(K.turn_stem(c, t), x) for c, t, x in rows
@@ -131,19 +133,6 @@ def test_sniff_batch(spark):
         assert r.fmt == K.sniff_format(r.text, r.fmt_hint), (r.text[:40], r.fmt_hint)
 
 
-def test_column_text_path_matches_arrow_path(spark, transcripts):
-    """text_path='column' (pure-Catalyst md for text rows + Arrow stage
-    for structured, unionByName) must be byte-equal to the default
-    single-stage path on every row."""
-    key = lambda r: (r.conv_id, r.turn_idx)  # noqa: E731
-    cols = ["conv_id", "turn_idx", "fmt", "md", "status", "message"]
-    a = sorted(extract(transcripts, hint_col="fmt_hint",
-                       text_path="arrow").select(*cols).collect(), key=key)
-    b = sorted(extract(transcripts, hint_col="fmt_hint",
-                       text_path="column").select(*cols).collect(), key=key)
-    assert a == b
-
-
 def test_vectorized_text_md_edge_stems():
     """The pyarrow.compute fast path (_text_md_vec) must match the
     kernel template byte-for-byte on every stem edge case: sanitize
@@ -172,13 +161,13 @@ def test_vectorized_text_md_edge_stems():
         assert g == want, (c, t, x)
 
 
-def test_edge_keys_both_paths(spark):
+def test_edge_keys(spark):
     """Review findings r5: (a) 6-digit and negative turn_idx must not
-    be truncated/mangled by either shape (F.lpad truncates — the
-    column twin uses format_string); (b) a NULL fmt row must reach the
-    output via the Arrow branch, not vanish from both; (c) a NULL
-    turn_idx on a text row is a per-row failure, not a silent
-    'ok'-with-null-md and not a task crash."""
+    be truncated/mangled (F.lpad truncates — the vectorized stem must
+    not); (b) a NULL fmt row must reach the output, classified per-row
+    by the structured dispatch; (c) a NULL turn_idx on a text row is a
+    per-row failure, not a silent 'ok'-with-null-md and not a task
+    crash."""
     from pyspark.sql import types as T
 
     rows = [
@@ -189,7 +178,7 @@ def test_edge_keys_both_paths(spark):
         (None, 9, "null conv", None),
         # ADVICE r5: conv_id padded with NON-ASCII whitespace (nbsp,
         # ideographic space, \x1c) — Java \s would leave it, Python
-        # str.strip() removes it; all paths must produce the stripped
+        # str.strip() removes it; extraction must produce the stripped
         # stem byte-for-byte
         ("\xa0　c-uni\x1c ", 11, "unicode ws conv", None),
     ]
@@ -209,25 +198,21 @@ def test_edge_keys_both_paths(spark):
                    F.lit("text")))
     ).drop("fmt_in")
 
-    for path in ("arrow", "column"):
-        got = {
-            (r.conv_id, r.turn_idx): r
-            for r in extract(df, text_path=path).collect()
-        }
-        assert len(got) == 6, f"{path}: rows dropped"
-        assert got[("c", 123456)].md == K.wrap_text_md(
-            K.turn_stem("c", 123456), "six digits"), path
-        assert got[("c", -12)].md == K.wrap_text_md(
-            K.turn_stem("c", -12), "negative"), path
-        assert got[("c", 7)].status == "ok"
-        nulled = got[("c", None)]
-        assert nulled.status == "failed" and nulled.md is None, path
-        assert got[(None, 9)].md == K.wrap_text_md(
-            K.turn_stem(None, 9), "null conv"), path
-        uni = got[("\xa0　c-uni\x1c ", 11)]
-        assert uni.md == K.wrap_text_md(
-            K.turn_stem("\xa0　c-uni\x1c ", 11), "unicode ws conv"), path
-        assert "\xa0" not in uni.md and "　" not in uni.md, path
+    got = {(r.conv_id, r.turn_idx): r for r in extract(df).collect()}
+    assert len(got) == 6, "rows dropped"
+    assert got[("c", 123456)].md == K.wrap_text_md(
+        K.turn_stem("c", 123456), "six digits")
+    assert got[("c", -12)].md == K.wrap_text_md(
+        K.turn_stem("c", -12), "negative")
+    assert got[("c", 7)].status == "ok"
+    nulled = got[("c", None)]
+    assert nulled.status == "failed" and nulled.md is None
+    assert got[(None, 9)].md == K.wrap_text_md(
+        K.turn_stem(None, 9), "null conv")
+    uni = got[("\xa0　c-uni\x1c ", 11)]
+    assert uni.md == K.wrap_text_md(
+        K.turn_stem("\xa0　c-uni\x1c ", 11), "unicode ws conv")
+    assert "\xa0" not in uni.md and "　" not in uni.md
 
 
 def test_time_budget_cuts_off_slow_batch(monkeypatch):

@@ -6,7 +6,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tool_documentsconverter_spark.functions.markdown import wrap_turn_md
+from tool_documentsconverter_spark.functions.markdown import wrap_text_md
+from tool_documentsconverter_spark.functions.text import turn_stem
 
 
 @pytest.fixture(scope="module")
@@ -143,7 +144,8 @@ def test_markdown_wrap_is_codegen(docs):
     """The pure-column emitter must stay inside WholeStageCodegen —
     no Python/Arrow eval node in the plan."""
     df = docs.select(
-        wrap_turn_md(F.col("source"), (F.col("doc_id") % 100).cast("int"),
+        wrap_text_md(turn_stem(F.col("source"),
+                               (F.col("doc_id") % 100).cast("int")),
                      F.col("text")).alias("md")
     )
     plan = explain(df)
@@ -193,12 +195,12 @@ def test_repetition_signals_is_shuffle_free(docs):
 
 
 def test_extract_arrow_path_scans_source_once(spark, sf_dir):
-    """The adopted single-stage shape reads the source exactly once;
-    the split ('column') shape provably pays a second scan — Catalyst
-    pushes each branch's fmt predicate through the repartition into
-    the scan (the measured reason it lost the 5M-turn A/B,
-    BENCH/BASELINE.md round 5).  Pinned so a future refactor that
-    accidentally double-scans the default path fails loudly."""
+    """The single-stage extraction reads the source exactly once.  A
+    split plan that routes text rows around the Arrow stage pays a
+    second scan — Catalyst pushes each branch's fmt predicate through
+    the repartition into the scan (the measured reason it lost the
+    5M-turn A/B, BENCH/BASELINE.md round 5).  Pinned so a future
+    refactor that double-scans the source fails loudly."""
     import re as _re
 
     from tool_documentsconverter_spark.operators.extract import extract
@@ -215,8 +217,7 @@ def test_extract_arrow_path_scans_source_once(spark, sf_dir):
         # section; "(N) Scan parquet" headers count each node once
         return len(_re.findall(r"\(\d+\) Scan parquet", explain(df)))
 
-    assert n_scans(extract(turns, text_path="arrow")) == 1
-    assert n_scans(extract(turns, text_path="column")) == 2
+    assert n_scans(extract(turns)) == 1
 
 
 def test_ivf_quantized_adds_no_scans_or_shuffles(spark, sf_dir):

@@ -190,3 +190,33 @@ def test_extract_stage_runs_in_one_wave(spark, transcripts, tmp_path,
     assert runs["buckets"][0] == n_buckets  # the stage was found
     assert runs["slots"][1:] == runs["buckets"][1:]
     assert len(runs["slots"][2]) == N_TURNS
+
+
+def test_row_drop_in_extraction_stage_aborts_before_lineage(
+        spark, transcripts, tmp_path, monkeypatch):
+    """The input-side Observation is the only witness of how many rows
+    entered the opaque Arrow stage.  A stage that loses a row must make
+    the job raise before the lineage commit, so the lost rows' bucket
+    is never recorded as done."""
+    import os
+
+    from tool_documentsconverter_spark.operators import extract as E
+
+    real = E._make_extractor
+
+    def dropping(*args, **kwargs):
+        inner = real(*args, **kwargs)
+
+        def run(batches):
+            first = True
+            for batch in inner(batches):
+                if first:
+                    batch, first = batch.slice(1), False
+                yield batch
+        return run
+
+    monkeypatch.setattr(E, "_make_extractor", dropping)
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
+    with pytest.raises(RuntimeError, match="dropped rows"):
+        P.run_extract_job(spark, transcripts, out, lin, n_buckets=N_BUCKETS)
+    assert not os.path.exists(lin)

@@ -14,8 +14,8 @@ Mirror of the reference's ConfigManager laws
 Keys are re-based for the Spark engine: the reference's thread-pool
 knobs (performance.workers) become partition counts, its filesystem
 lifecycle (delete/trash/backup) is out of scope for a table-to-table
-job (documented in SURVEY §2.12), and a `pipeline` section carries the
-bucketing/salting parameters of plans/pipeline.py.  Dotted-path get()
+job (documented in SURVEY §2.12), and the `performance` section carries
+the bucketing/salting parameters of plans/pipeline.py.  Dotted-path get()
 is preserved.
 
 YAML parsing uses PyYAML when importable; otherwise a strict fallback
@@ -30,8 +30,6 @@ import re
 from typing import Any, Dict, List, Optional
 
 VALID_FILE_TYPES = ("text", "pdf", "docx", "doc", "html", "all")
-VALID_OUTPUT_MODES = ("overwrite", "append", "errorifexists")
-VALID_LOG_LEVELS = ("debug", "info", "warning", "error")
 
 
 def default_config() -> Dict[str, Any]:
@@ -40,14 +38,11 @@ def default_config() -> Dict[str, Any]:
         "file_types": ["text", "pdf", "docx", "doc", "html"],
         "conversion": {
             "force": False,            # reference conversion.force
-            "include_hidden": False,   # F2 predicate
-            "fail_fast": False,        # False = reference failure isolation
         },
         "performance": {
             "partitions": 0,           # 0 = min(buckets, task slots)
             "buckets": 64,             # lineage/checkpoint granularity
             "salt": 32,                # skew sub-splits for heavy convs
-            "heavy_threshold": 0.05,   # sample share marking a heavy conv
         },
         "filters": {
             "exclude_sources": [       # F1 exclude-dir analog
@@ -56,11 +51,7 @@ def default_config() -> Dict[str, Any]:
             ],
         },
         "output": {
-            "mode": "overwrite",       # parquet save mode (dynamic parts)
             "compression": "zstd",
-        },
-        "logging": {
-            "level": "info",
         },
     }
 
@@ -227,12 +218,6 @@ def validate(config: Dict[str, Any]) -> List[str]:
     for ft in get(config, "file_types", []) or []:
         if ft not in VALID_FILE_TYPES:
             errors.append(f"invalid file type: {ft}")
-    mode = get(config, "output.mode")
-    if mode and mode not in VALID_OUTPUT_MODES:
-        errors.append(f"invalid output mode: {mode}")
-    level = get(config, "logging.level")
-    if level and level not in VALID_LOG_LEVELS:
-        errors.append(f"invalid log level: {level}")
     buckets = get(config, "performance.buckets")
     if not isinstance(buckets, int) or buckets < 1:
         errors.append(f"performance.buckets must be a positive int: {buckets}")
@@ -243,10 +228,6 @@ def validate(config: Dict[str, Any]) -> List[str]:
     if not isinstance(partitions, int) or partitions < 0:
         errors.append(
             f"performance.partitions must be a non-negative int: {partitions}")
-    thr = get(config, "performance.heavy_threshold")
-    if not isinstance(thr, (int, float)) or not 0 < thr <= 1:
-        errors.append(
-            f"performance.heavy_threshold must be in (0, 1]: {thr}")
     if not isinstance(get(config, "filters.exclude_sources"), list):
         errors.append("filters.exclude_sources must be a list")
     return errors

@@ -1,17 +1,16 @@
 """Pure-column Markdown emitters (SURVEY.md §2.4).
 
-The simple templates compile to codegen'd Catalyst `concat`
-expressions — the fast path for plain-text payloads, measurably
-cheaper than crossing into Python.  Byte-compatibility with
-kernels.wrap_text_md is enforced by tests.
+Column twins of the kernel templates: they compile to codegen'd
+Catalyst `concat` expressions, for queries that build Markdown without
+an Arrow stage.  The extraction stage itself emits with pyarrow.compute
+(operators/extract.py).  Byte-compatibility with kernels.wrap_text_md
+is enforced by tests.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from .text import turn_stem
 
 
 def wrap_text_md(stem: Column, text: Column) -> Column:
@@ -22,10 +21,6 @@ def wrap_text_md(stem: Column, text: Column) -> Column:
         F.lit("# "), stem, F.lit("\n\n```text\n"),
         F.coalesce(text, F.lit("")), F.lit("\n```\n"),
     )
-
-
-def wrap_turn_md(conv_id: Column, turn_idx: Column, text: Column) -> Column:
-    return wrap_text_md(turn_stem(conv_id, turn_idx), text)
 
 
 def verify_markdown(md: Column) -> Column:

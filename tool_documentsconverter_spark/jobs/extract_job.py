@@ -47,14 +47,6 @@ def parse_args(argv=None) -> argparse.Namespace:
                    help="parquet codec for the output (zstd/snappy/lz4)")
     p.add_argument("--force", action="store_true")
     p.add_argument("--snapshot", default="")
-    p.add_argument("--text-path", default="arrow",
-                   choices=["arrow", "column"],
-                   help="plain-text execution shape (operators/extract.py "
-                        "module docstring): 'arrow' = vectorized "
-                        "pyarrow.compute inside the single Arrow stage "
-                        "(default, measured faster); 'column' = "
-                        "pure-Catalyst md for text rows + Arrow stage for "
-                        "structured only (A/B evidence)")
     p.add_argument("--time-budget-s", type=float, default=None,
                    help="soft per-batch wall-clock budget for the "
                         "structured dispatch loop: rows past the budget "
@@ -104,7 +96,6 @@ def main(argv=None) -> int:
             input_snapshot=args.snapshot or args.input,
             include_fmts=get(cfg, "file_types"),
             exclude_convs=get(cfg, "filters.exclude_sources"),
-            text_path=args.text_path,
             time_budget_s=args.time_budget_s,
         )
         elapsed = time.perf_counter() - t0

@@ -4,28 +4,15 @@ with the dominant plain-text class handled off the per-row path.
 Design (SURVEY.md §2.3, §3.4): a SINGLE vectorized stage with the
 per-format dispatch inside — no per-row Python UDF calls from the JVM
 (the Python boundary is crossed once per Arrow batch; batch size
-bounded by spark.sql.execution.arrow.maxRecordsPerBatch).  Two
-execution shapes for the plain-text majority class (~90% of a
-realistic transcript corpus), selectable via ``text_path``:
+bounded by spark.sql.execution.arrow.maxRecordsPerBatch).  Plain-text
+rows (~90% of a realistic transcript corpus) are emitted by
+**vectorized pyarrow.compute kernels** (lpad/replace_regex/trim/join —
+C++, no per-row Python); only structured payloads (PDF/OOXML/HTML/OLE)
+run the stdlib kernels per element.  One scan, one shuffle, one
+Python boundary; BENCH/BASELINE.md records why a split plan (text rows
+as a Catalyst Column, unioned with an Arrow stage for the rest) lost.
 
-- ``text_path="arrow"`` (default): text rows stay inside the single
-  Arrow stage but are emitted by **vectorized pyarrow.compute
-  kernels** (lpad/replace_regex/trim/join — C++, no per-row Python);
-  only structured payloads (PDF/OOXML/HTML/OLE) run the stdlib
-  kernels per element.  One scan, one shuffle, one Python boundary.
-- ``text_path="column"``: text rows never cross into Python at all —
-  their Markdown is a pure Catalyst `concat` Column
-  (functions/markdown.wrap_turn_md, whole-stage codegen) and only
-  structured rows enter the Arrow stage; the two branches recombine
-  with unionByName.  NB: Catalyst pushes each branch's `fmt`
-  predicate through the repartition into the scan, so the plan reads
-  the source twice (each branch shuffling its disjoint subset) —
-  measured SLOWER than "arrow" at 5M turns on both mixes
-  (BENCH/BASELINE.md round-5 table), which is why "arrow" is the
-  default; kept for A/B evidence and for sources where a second
-  pruned scan is cheaper than the Arrow round-trip.
-
-Byte-parity: both shapes emit the kernel template exactly
+Byte-parity: the vectorized template emits the kernel output exactly
 (kernels.wrap_text_md / turn_stem — `# {stem}\\n\\n```text\\n...`);
 pyarrow's lpad does not truncate and utf8_trim is given str.strip()'s
 exact whitespace set, so the vectorized stem matches
@@ -50,7 +37,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Observation
 
 from .. import kernels
-from ..functions.markdown import wrap_turn_md
 from ..functions.sniff import sniff_format
 
 RESULT_COLS = ["md", "status", "message", "seconds"]
@@ -106,7 +92,8 @@ def _text_md_vec(conv: pa.Array, turn: pa.Array, text: pa.Array) -> pa.Array:
 
 def _make_extractor(hint_col: str | None = None, drop_cols: tuple = (),
                     time_budget_s: float | None = None):
-    """Arrow-native batch extractor.  Deliberately NO pandas round
+    """Arrow-native batch extractor over batches that already carry
+    `fmt` (extract() adds it JVM-side).  Deliberately NO pandas round
     trip: original columns pass through as untouched Arrow arrays
     (zero copy), the plain-text class is emitted by pyarrow.compute
     kernels over whole arrays, and only structured payloads
@@ -128,7 +115,6 @@ def _make_extractor(hint_col: str | None = None, drop_cols: tuple = (),
 
     def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         extract_turn = kernels.extract_turn
-        sniff = kernels.sniff_format
         FMT_TEXT = kernels.FMT_TEXT
         OK = kernels.OK
 
@@ -141,14 +127,7 @@ def _make_extractor(hint_col: str | None = None, drop_cols: tuple = (),
             conv_col = batch.column(names.index("conv_id"))
             turn_col = batch.column(names.index("turn_idx"))
             text_col = batch.column(names.index("text"))
-            if "fmt" in names:
-                fmt_col = batch.column(names.index("fmt"))
-            else:
-                texts_all = text_col.to_pylist()
-                fmt_col = pa.array(
-                    [sniff(t if t is not None else "") for t in texts_all],
-                    type=pa.string(),
-                )
+            fmt_col = batch.column(names.index("fmt"))
 
             # vectorized fast path for the plain-text class; a null fmt
             # (only possible with a user-supplied fmt column) routes to
@@ -223,9 +202,6 @@ def _make_extractor(hint_col: str | None = None, drop_cols: tuple = (),
             arrays = [a for a, f in zip(batch.columns, batch.schema)
                       if f.name not in drop_cols]
             fields = [f for f in batch.schema if f.name not in drop_cols]
-            if "fmt" not in names:
-                arrays.append(fmt_col)
-                fields.append(pa.field("fmt", pa.string()))
             arrays += [
                 md, status, message,
                 pa.array([per_row] * n, type=pa.float64()),
@@ -250,73 +226,25 @@ def _arrow_out_schema(df: DataFrame, drop: tuple) -> str:
 
 
 def extract(df: DataFrame, hint_col: str | None = None,
-            drop_cols: tuple = (), text_path: str = "arrow",
-            observe_arrow_in: Optional[Observation] = None,
-            observe_text_in: Optional[Observation] = None,
+            drop_cols: tuple = (),
+            observe_in: Optional[Observation] = None,
             time_budget_s: float | None = None) -> DataFrame:
     """Append (fmt, md, status, message, seconds) extraction columns.
 
     Input must carry conv_id:string, turn_idx:int, text:string; all
     other columns pass through untouched, EXCEPT those named in
-    `drop_cols`, which are dropped inside the Arrow stage (or the
-    column projection) so they never pay the Python -> JVM return
-    transfer (use for the raw payload when the output only needs md).
+    `drop_cols`, which are dropped inside the Arrow stage so they never
+    pay the Python -> JVM return transfer (use for the raw payload when
+    the output only needs md).
 
-    ``text_path`` picks the plain-text execution shape (module
-    docstring); ``observe_arrow_in`` / ``observe_text_in`` attach
-    row-count Observations (metric name ``rows_in``) to the Arrow
-    branch input and the column branch input respectively, so callers
-    can prove the opaque stage is row-preserving without a second
-    pass.  ``observe_text_in`` is only attached when
-    ``text_path="column"`` — never pass one otherwise (an unattached
-    Observation blocks forever on .get).
+    ``observe_in`` attaches a row-count Observation (metric name
+    ``rows_in``) to the stage input, so callers can prove the opaque
+    stage is row-preserving without a second pass.
     """
     if "fmt" not in df.columns:
         df = with_sniffed_format(df, hint_col)
     drop = tuple(c for c in drop_cols if c in df.columns and c != "fmt")
-
-    if text_path == "column":
-        # coalesce, not a bare equality: a NULL fmt (possible only with
-        # a user-supplied fmt column) makes BOTH `fmt == text` and its
-        # negation NULL, which would silently drop the row from both
-        # branches — route nulls to the Arrow branch, which classifies
-        # them per-row exactly like the single-stage shape
-        is_text = F.coalesce(F.col("fmt") == kernels.FMT_TEXT, F.lit(False))
-        kept = [f.name for f in df.schema.fields if f.name not in drop]
-        text_df = df.where(is_text)
-        if observe_text_in is not None:
-            text_df = text_df.observe(
-                observe_text_in, F.count(F.lit(1)).alias("rows_in")
-            )
-        # coalesce conv_id like the kernel's f-string (None -> "None");
-        # only a NULL turn_idx can null the template
-        md_expr = wrap_turn_md(F.coalesce(F.col("conv_id"), F.lit("None")),
-                               F.col("turn_idx"), F.col("text"))
-        # null-key rows (NULL turn_idx) null out the template — mark
-        # them failed, mirroring the Arrow shape's per-row isolation
-        text_out = text_df.select(
-            *kept,
-            md_expr.alias("md"),
-            F.when(md_expr.isNull(), F.lit(kernels.FAILED))
-            .otherwise(F.lit(kernels.OK)).alias("status"),
-            F.when(md_expr.isNull(), F.lit("null turn_idx on text row"))
-            .otherwise(F.lit("")).alias("message"),
-            F.lit(0.0).alias("seconds"),
-        )
-        arrow_df = df.where(~is_text)
-        if observe_arrow_in is not None:
-            arrow_df = arrow_df.observe(
-                observe_arrow_in, F.count(F.lit(1)).alias("rows_in")
-            )
-        arrow_out = arrow_df.mapInArrow(
-            _make_extractor(hint_col, drop, time_budget_s),
-            _arrow_out_schema(df, drop)
-        )
-        return text_out.unionByName(arrow_out)
-
-    if text_path != "arrow":
-        raise ValueError(f"unknown text_path: {text_path!r}")
-    if observe_arrow_in is not None:
-        df = df.observe(observe_arrow_in, F.count(F.lit(1)).alias("rows_in"))
+    if observe_in is not None:
+        df = df.observe(observe_in, F.count(F.lit(1)).alias("rows_in"))
     return df.mapInArrow(_make_extractor(hint_col, drop, time_budget_s),
                          _arrow_out_schema(df, drop))

@@ -32,6 +32,18 @@ MAGIC = {
 }
 
 
+def _media_payload(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
+    """Project (media_id, payload) as the input of a media Arrow stage.
+
+    Deliberately NOT fan_out'd (round-8 A/B at sf1.0): the per-row
+    header decode is ~10us, so repartitioning the payload column costs
+    more than the extra cores recover on every media query (0.53s ->
+    0.70s measured for media_resize); a real corpus scan has enough
+    splits anyway."""
+    return df.select(F.col(id_col).alias("media_id"),
+                     F.col(payload_col).alias("payload"))
+
+
 def sniff_media(payload: bytes) -> str:
     if payload is None:
         return "unknown"
@@ -207,14 +219,7 @@ def extract_media_features(df: DataFrame, id_col: str = "media_id",
     ``use_stub="stdlib"`` pins the header-parse+hash-fallback decoder
     (both environment-independent — what the parity oracles replay;
     see _pick_decoder); default None probes for PIL executor-side."""
-    # NOT fan_out'd (round-8 A/B at sf1.0): the per-row header decode
-    # is ~10us, so repartitioning the payload column costs more than
-    # the extra cores recover on every media query (0.53s -> 0.70s
-    # measured for media_resize); a real corpus scan has enough
-    # splits anyway
-    src = df.select(F.col(id_col).alias("media_id"),
-                    F.col(payload_col).alias("payload"))
-    return src.mapInArrow(
+    return _media_payload(df, id_col, payload_col).mapInArrow(
         _feature_batches(use_stub),
         "media_id long, kind string, width int, height int, mode string, "
         "payload_bytes long, payload_md5 string, status string",
@@ -316,14 +321,7 @@ def resize_media(df: DataFrame, max_side: int = 256,
     oracle-replayed paths); the target-dimension math (`fit_within`)
     is shared by all paths and integer-only, so the `media_resize`
     oracle replays it exactly."""
-    # NOT fan_out'd (round-8 A/B at sf1.0): the per-row header decode
-    # is ~10us, so repartitioning the payload column costs more than
-    # the extra cores recover on every media query (0.53s -> 0.70s
-    # measured for media_resize); a real corpus scan has enough
-    # splits anyway
-    src = df.select(F.col(id_col).alias("media_id"),
-                    F.col(payload_col).alias("payload"))
-    return src.mapInArrow(
+    return _media_payload(df, id_col, payload_col).mapInArrow(
         _resize_batches(max_side, use_stub),
         "media_id long, kind string, width int, height int, "
         "out_width int, out_height int, resized binary, status string",
@@ -382,14 +380,7 @@ def sample_frames(df: DataFrame, n_frames: int = 4,
     swaps in PyAV/ffmpeg inside `_frame_batches` only); the Spark
     surface — binary in, multiplied rows out of one Arrow stage,
     failure isolation per asset — is real and tested."""
-    # NOT fan_out'd (round-8 A/B at sf1.0): the per-row header decode
-    # is ~10us, so repartitioning the payload column costs more than
-    # the extra cores recover on every media query (0.53s -> 0.70s
-    # measured for media_resize); a real corpus scan has enough
-    # splits anyway
-    src = df.select(F.col(id_col).alias("media_id"),
-                    F.col(payload_col).alias("payload"))
-    return src.mapInArrow(
+    return _media_payload(df, id_col, payload_col).mapInArrow(
         _frame_batches(n_frames),
         "media_id long, frame_idx int, offset_ms long, "
         "frame_md5 string, frame binary, status string",
@@ -530,14 +521,7 @@ def extract_audio_features(df: DataFrame, id_col: str = "media_id",
     one Arrow stage.  Entirely real — header fields, not a stub: the
     metadata a curation pipeline filters on never needs a decoder.
     Unparseable payloads isolate as status='failed' rows."""
-    # NOT fan_out'd (round-8 A/B at sf1.0): the per-row header decode
-    # is ~10us, so repartitioning the payload column costs more than
-    # the extra cores recover on every media query (0.53s -> 0.70s
-    # measured for media_resize); a real corpus scan has enough
-    # splits anyway
-    src = df.select(F.col(id_col).alias("media_id"),
-                    F.col(payload_col).alias("payload"))
-    return src.mapInArrow(
+    return _media_payload(df, id_col, payload_col).mapInArrow(
         _audio_batches(),
         "media_id long, kind string, sample_rate int, channels int, "
         "bits_per_sample int, duration_ms long, payload_bytes long, "

@@ -174,7 +174,6 @@ def run_extract_job(
     only_buckets: Optional[Sequence[int]] = None,
     include_fmts: Optional[Sequence[str]] = None,
     exclude_convs: Optional[Sequence[str]] = None,
-    text_path: str = "arrow",
     time_budget_s: Optional[float] = None,
 ) -> JobSummary:
     """The full north-rule job: resume anti-join -> salted repartition
@@ -256,14 +255,10 @@ def run_extract_job(
     # scan; doc_to_md/main.py:580-592 analog).  The input-side
     # observation makes rows_in a real measurement, so a row silently
     # dropped inside the extraction stage is detected, not papered
-    # over.  With text_path="column" the input splits into two
-    # branches, each with its own Observation (one Observation object
-    # cannot appear in two plan branches), and rows_in is their sum.
+    # over.
     from pyspark.sql import Observation
 
-    obs_arrow_in = Observation("extract_input_arrow")
-    obs_text_in = (Observation("extract_input_text")
-                   if text_path == "column" else None)
+    obs_in = Observation("extract_input")
     # drop the raw payload from the OUTPUT — inside the Arrow stage, so
     # the payload bytes never make the Python -> JVM return trip: md
     # already embeds the extracted content, and carrying text through
@@ -271,9 +266,7 @@ def run_extract_job(
     # writes only the .md artifact, never a copy of the source)
     extracted = extract(staged, hint_col="fmt_hint",
                         drop_cols=("text", "fmt_hint"),
-                        text_path=text_path,
-                        observe_arrow_in=obs_arrow_in,
-                        observe_text_in=obs_text_in,
+                        observe_in=obs_in,
                         time_budget_s=time_budget_s)
     obs = Observation("extract_metrics")
     observed = extracted.observe(
@@ -294,9 +287,7 @@ def run_extract_job(
         .parquet(output_path)
     )
     m = obs.get
-    rows_in_total = int(obs_arrow_in.get["rows_in"])
-    if obs_text_in is not None:
-        rows_in_total += int(obs_text_in.get["rows_in"])
+    rows_in_total = int(obs_in.get["rows_in"])
     phases["extract_write"] = round(time.perf_counter() - t, 2)
     if rows_in_total != int(m["rows_out"]):
         raise RuntimeError(
